@@ -10,7 +10,17 @@ a crash restarts the algorithm.
 
 Storage is parquet-directory-per-iteration with a ``_meta.json`` commit
 marker written only after the parquet write succeeds (write-then-commit,
-same recovery discipline as an Iceberg snapshot commit).
+same recovery discipline as an Iceberg snapshot commit). The marker goes
+to a dot-prefixed temp file first and is moved into place with
+``os.replace``, so a crash never leaves an empty marker behind.
+
+The store is driver-local (``os.makedirs``, ``open``), so a durable
+iteration costs one Spark job, its state write: the re-read carries the
+written frame's schema (no inference job), and each lineage append is one
+parquet file built from an Arrow table on the driver, written under a
+dot-prefixed temp name in ``_lineage/`` (Spark's file index skips it) and
+committed by rename. Older ``_lineage/`` directories written by Spark's
+parquet writer read back unchanged next to the new files.
 
 Why not Iceberg *here*: this container ships no iceberg-spark-runtime jar
 (see ``iceberg_available``) and has no network/package installs, so an
@@ -20,7 +30,9 @@ local to this file: create the two tables from ``ICEBERG_STATE_DDL`` /
 ``ICEBERG_LINEAGE_DDL`` and replace the parquet writes with
 ``writeTo(...).append()`` — the commit marker disappears because Iceberg
 snapshot commits are already atomic, and ``latest_complete`` becomes a
-``MAX(iteration)`` over committed snapshots.
+``MAX(iteration)`` over committed snapshots. ``IcebergCheckpointStore``
+below is that swap; it keeps Spark-side ``writeTo(...).append()`` for
+lineage and stays parked until an Iceberg runtime jar is present.
 """
 
 from __future__ import annotations
@@ -28,6 +40,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import uuid
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -71,6 +84,15 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
+def _commit_marker(d: str, meta: dict[str, Any]) -> None:
+    """Write ``d/_meta.json`` atomically: a crash mid-write leaves the
+    previous marker (or none), never an empty one."""
+    tmp = os.path.join(d, "._meta.json.tmp")
+    with open(tmp, "w") as f:
+        json.dump(meta, f)
+    os.replace(tmp, os.path.join(d, "_meta.json"))
+
+
 class CheckpointStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -88,9 +110,9 @@ class CheckpointStore:
         (fresh lineage — the plan no longer grows with iteration count)."""
         d = self._iter_dir(run_id, algorithm, iteration)
         state.write.mode("overwrite").parquet(d)
-        with open(os.path.join(d, "_meta.json"), "w") as f:
-            json.dump({"iteration": iteration, **meta}, f)
-        return self.spark.read.parquet(d)
+        _commit_marker(d, {"iteration": iteration, **meta})
+        # the known schema spares the re-read a schema-inference job
+        return self.spark.read.schema(state.schema).parquet(d)
 
     def read_state(self, run_id: str, algorithm: str, iteration: int) -> DataFrame:
         return self.spark.read.parquet(self._iter_dir(run_id, algorithm, iteration))
@@ -100,9 +122,9 @@ class CheckpointStore:
     ) -> None:
         """Overwrite an already-committed iteration's metadata (the
         engine finalizes history/converged after write_state)."""
-        d = self._iter_dir(run_id, algorithm, iteration)
-        with open(os.path.join(d, "_meta.json"), "w") as f:
-            json.dump({"iteration": iteration, **meta}, f)
+        _commit_marker(
+            self._iter_dir(run_id, algorithm, iteration), {"iteration": iteration, **meta}
+        )
 
     def read_meta(self, run_id: str, algorithm: str, iteration: int) -> dict[str, Any]:
         with open(os.path.join(self._iter_dir(run_id, algorithm, iteration), "_meta.json")) as f:
@@ -127,8 +149,22 @@ class CheckpointStore:
         message_count, wall_time_ms)."""
         if not rows:
             return
-        df = self.spark.createDataFrame(rows, LINEAGE_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(os.path.join(self.root, "_lineage"))
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        types = {"string": pa.string(), "int": pa.int32(), "long": pa.int64()}
+        schema = pa.schema(
+            [(name, types[t]) for name, t in (f.split() for f in LINEAGE_SCHEMA.split(","))]
+        )
+        table = pa.Table.from_arrays(
+            [pa.array(col, f.type) for col, f in zip(zip(*rows), schema)], schema=schema
+        )
+        d = os.path.join(self.root, "_lineage")
+        os.makedirs(d, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(d, f".{name}.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(d, name))
 
     def read_lineage(self) -> DataFrame:
         return self.spark.read.schema(LINEAGE_SCHEMA).parquet(

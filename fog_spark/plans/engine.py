@@ -434,8 +434,9 @@ class ScatterGatherEngine:
             self.mat.free(prev_state)
             parts: list[tuple[int, int]] = []
             if self.collect_lineage:
-                # the checkpoint/write action above evaluated msgs, so
-                # the metrics are final; Observation.get does not block
+                # Observation.get waits until the listener delivers the
+                # metrics of the first action that consumed msgs, so the
+                # checkpoint/write action above must be that action
                 vals = obs.get
                 total_msgs = int(vals["_mc_total"] or 0)
                 parts = [

@@ -1,7 +1,10 @@
 """Engine mechanics: checkpoint/lineage/resume (north_rule N4), salting
 equivalence (F4), partition-count invariance."""
 
+import os
+
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from fog_spark.algos import ConnectedComponents, FogPageRank
@@ -9,6 +12,13 @@ from fog_spark.plans.checkpoint import CheckpointStore
 from fog_spark.plans.engine import ScatterGatherEngine
 from tests.conftest import make_edges_df
 from tests import graphs as GX
+
+
+_LINEAGE_DTYPES = [
+    ("run_id", "string"), ("algorithm", "string"), ("iteration", "int"),
+    ("partition_id", "int"), ("edge_count", "bigint"),
+    ("message_count", "bigint"), ("wall_time_ms", "bigint"),
+]
 
 
 def _vertices(spark, n):
@@ -75,7 +85,9 @@ def test_checkpoint_and_lineage(spark, tmp_path):
     assert res.iterations == 3
     store = CheckpointStore(spark, str(tmp_path))
     assert store.latest_complete("pr-run", "fog_pagerank") == 3
-    lin = store.read_lineage().collect()
+    lin_df = store.read_lineage()
+    assert lin_df.dtypes == _LINEAGE_DTYPES
+    lin = lin_df.collect()
     assert {r["iteration"] for r in lin} == {1, 2, 3}
     # every scanned edge emits exactly one message: 12 edges per iteration
     per_iter = {}
@@ -83,6 +95,135 @@ def test_checkpoint_and_lineage(spark, tmp_path):
         per_iter[r["iteration"]] = per_iter.get(r["iteration"], 0) + r["message_count"]
     assert all(v == len(edges) for v in per_iter.values())
     assert all(r["wall_time_ms"] >= 0 for r in lin)
+
+
+def _jobs_in_group(spark, group, fn):
+    """Spark jobs ``fn`` ran, counted under its own job group. The status
+    tracker is fed by the listener bus, which is drained before reading."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_durable_iteration_job_counts(spark, tmp_path):
+    """A durable iteration's commit costs one Spark job: the state write.
+    The re-read carries the written schema (no inference job) and the
+    lineage append is a driver-side file."""
+    store = CheckpointStore(spark, str(tmp_path))
+    state = spark.range(50).select("id", (F.col("id") * 3).alias("rank_milli"))
+    out = {}
+    n_write = _jobs_in_group(
+        spark, "ckpt-write-state",
+        lambda: out.update(df=store.write_state("j", "pr", 1, state, {})),
+    )
+    n_lineage = _jobs_in_group(
+        spark, "ckpt-append-lineage",
+        lambda: store.append_lineage([("j", "pr", 1, 0, 5, 5, 12)]),
+    )
+    assert (n_write, n_lineage) == (1, 0)
+    assert out["df"].dtypes == state.dtypes
+    assert out["df"].count() == 50
+    assert store.read_lineage().count() == 1
+
+
+def test_lineage_reads_spark_written_and_driver_appends(spark, tmp_path):
+    """A ``_lineage/`` written by Spark's parquet writer (part files,
+    _SUCCESS, .crc) still reads back next to driver-side appends, with
+    LINEAGE_SCHEMA types; a stray dot-prefixed temp file is never read."""
+    from fog_spark.plans.checkpoint import LINEAGE_SCHEMA
+
+    old = [("old", "pr", 1, 0, 10, 7, 100), ("old", "pr", 1, 1, 11, 8, 100)]
+    lin_dir = tmp_path / "_lineage"
+    spark.createDataFrame(old, LINEAGE_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(str(lin_dir))
+    names = os.listdir(lin_dir)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    (lin_dir / ".part-crashed.parquet.tmp").write_bytes(b"not parquet")
+    store = CheckpointStore(spark, str(tmp_path))
+    new1 = [("new", "pr", 2, 0, 10, 9, 50)]
+    new2 = [("new", "pr", 3, 0, 10, 4, 60), ("new", "pr", 3, 3, 2**40, 1, 61)]
+    store.append_lineage(new1)
+    store.append_lineage(new2)
+    # the two appends committed as plain part files; no temp file left
+    added = set(os.listdir(lin_dir)) - set(names) - {".part-crashed.parquet.tmp"}
+    assert len(added) == 2
+    assert all(n.startswith("part-") and n.endswith(".parquet") for n in added)
+    df = store.read_lineage()
+    assert df.dtypes == _LINEAGE_DTYPES
+    assert sorted(tuple(r) for r in df.collect()) == sorted(old + new1 + new2)
+
+
+def _pagerank_milli_ranks(spark, ckpt):
+    from fog_spark.algos import FogPageRankMilli
+
+    edges, n = GX.ALL_GRAPHS["two_triangles"]
+    res = ScatterGatherEngine(spark, checkpoint_dir=ckpt).run(
+        FogPageRankMilli(niters=4), make_edges_df(spark, edges), run_id="crash",
+        vertices=_vertices(spark, n),
+    )
+    return {r["id"]: r["rank_milli"] for r in res.state.collect()}
+
+
+@pytest.fixture(scope="module")
+def uninterrupted_milli(spark, tmp_path_factory):
+    return _pagerank_milli_ranks(spark, str(tmp_path_factory.mktemp("full")))
+
+
+class _Crash(Exception):
+    pass
+
+
+def _inject_crash(m, method, at_iter):
+    """Make iteration ``at_iter`` die inside ``CheckpointStore.<method>``:
+    in ``append_lineage`` on entry (its state marker is committed by
+    then), in ``write_state``/``write_meta`` from ``json.dump`` while the
+    marker file is open."""
+    import json
+
+    orig = getattr(CheckpointStore, method)
+
+    def boom(*a, **k):
+        raise _Crash(method)
+
+    if method == "append_lineage":
+        def wrapped(self, rows):
+            if rows and rows[0][2] == at_iter:
+                boom()
+            return orig(self, rows)
+    else:
+        def wrapped(self, run_id, algorithm, iteration, *rest):
+            if iteration == at_iter:
+                m.setattr(json, "dump", boom)
+            return orig(self, run_id, algorithm, iteration, *rest)
+
+    m.setattr(CheckpointStore, method, wrapped)
+
+
+@pytest.mark.parametrize(
+    "method",
+    ["write_state", "append_lineage", "write_meta"],
+    ids=["after_state_before_marker", "after_marker_before_lineage", "inside_write_meta"],
+)
+def test_crash_at_phase_resumes_identically(
+    spark, tmp_path, monkeypatch, uninterrupted_milli, method
+):
+    """A checkpointed run that dies at any commit phase of iteration 2
+    resumes, with a fresh engine, to the uninterrupted answer."""
+    ckpt = str(tmp_path)
+    with monkeypatch.context() as m:
+        _inject_crash(m, method, 2)
+        with pytest.raises(_Crash):
+            _pagerank_milli_ranks(spark, ckpt)
+    committed = CheckpointStore(spark, ckpt).latest_complete("crash", "fog_pagerank_milli")
+    assert committed == (1 if method == "write_state" else 2)
+    assert _pagerank_milli_ranks(spark, ckpt) == uninterrupted_milli
 
 
 def test_resume_equals_uninterrupted(spark, tmp_path):
